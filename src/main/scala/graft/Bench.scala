@@ -1,6 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, expr, xxhash64}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 object Bench {
 
@@ -10,93 +9,64 @@ object Bench {
     */
   val ContaminationLimit = 1.5
 
-  /** Block-manager hygiene between independently timed queries (guide
-    * §5: unpersist when done). Every `localCheckpoint` a query takes
-    * pins its blocks until the driver GC drops the RDD reference and
-    * the ContextCleaner notices — at 308 queries × 2 samples the r16
-    * driver run accumulated enough orphaned checkpoint blocks to
-    * thrash the storage pool on the loaded 32-thread box
-    * (txt_decontaminate_bloom 36.7 s there vs 1.5 s at 8 threads, and
-    * 1.4 s here once clean). Sweeping INSIDE `drive` (so each query
-    * pays for its own garbage) drops every locally-checkpointed RDD
-    * the moment its action has returned, EXCEPT the checkpoint RDDs
-    * memoized artifacts scan ([[graft.operators.TextOps.memoPinnedRddIds]]
-    * — those blocks are the only copy and live for the session, which
-    * is the memo discipline working). Dataset-level memo caches are
-    * not locally checkpointed and are never touched.
+  /** Overlap degree of the warmup pool: 4 halves warmup wall on a
+    * 4-core box; more overlap pressures the storage pool the index
+    * artifacts land in.
     */
-  def sweepCheckpoints(spark: SparkSession): Unit = {
-    val pinned = graft.operators.TextOps.memoPinnedRddIds(spark)
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (org.apache.spark.rdd.GraftRddInspect.isLocallyCheckpointed(rdd) &&
-          !pinned.contains(id))
-        rdd.unpersist(blocking = false)
-    }
-  }
+  private val WarmupThreads = 4
+
+  /** [[Harness.sweepCheckpoints]], under the name the benchmark build
+    * (perfbench) calls between library operations.
+    */
+  def sweepCheckpoints(spark: SparkSession): Unit = Harness.sweepCheckpoints(spark)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Full-width sink: hash every output column and fold, so Catalyst
-    // cannot prune unreferenced columns the way a bare .count() lets it
-    // (projection queries would otherwise measure scan-only). The fold
-    // is bit_xor, NOT sum: summing 64-bit hashes overflows almost
-    // immediately under ANSI mode and would abort the query mid-scan,
-    // silently under-measuring it.
-    // `sweep` must be false when drives overlap (the warmup pool): a
-    // sweep from one thread would drop a concurrent query's in-flight
-    // checkpoint blocks mid-action. The sequential timed loop sweeps
-    // after every action so each query pays for its own garbage.
-    def drive(name: String, sweep: Boolean = true): Unit = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.select(xxhash64(df.columns.map(col): _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
-      if (sweep) sweepCheckpoints(spark)
-    }
+    val (fullJson, ok) = Harness.withSession(
+      run(_, sfDir, SparkEntry.queries, SparkEntry.warmups))
+    writeArtifact(fullJson)
+    if (!ok) sys.exit(1)
+  }
+
+  /** Warm up, then time every query in `queries`; prints the stdout
+    * metric line and returns the full-precision JSON artifact together
+    * with whether every warmup entry and every timed query succeeded.
+    * A query that throws is recorded in the artifact as
+    * `{"status":"failed","error":<exception class>}` and left out of
+    * the total and the stdout line.
+    */
+  def run(spark: SparkSession, sfDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame],
+      warmups: Seq[String]): (String, Boolean) = {
+    def drive(name: String, sweep: Boolean = true): Unit =
+      Harness.drive(queries(name)(spark, sfDir), sweep)
     // Untimed warmup, registry-owned (SparkEntry.warmups — see the
     // rationale there): JVM/codegen/parquet-footer startup plus every
-    // build-once-per-session memoized artifact lands here instead of
-    // inside the first timed sample of whichever family query runs
-    // first. WarmupSpec asserts the list is never stale (every memo
-    // key some registry query builds is touched by a warmup entry).
-    // The warmup is untimed in the headline but NOT unaccounted: total
-    // and per-entry wall seconds ride the artifact, so the memoized
-    // trained-artifact discipline (rank tables, merge tables, peel
-    // results built here and served by the timed queries) is auditable
-    // from the committed JSON alone — steady-state serving cost in
-    // `queries`, cold-build cost in `warmup_by_entry`.
+    // IndexStore artifact lands here instead of inside the first timed
+    // sample of whichever family query runs first. WarmupSpec asserts
+    // the list is never stale. Total and per-entry wall seconds ride the
+    // artifact, so cold-build cost (`warmup_by_entry`) and steady-state
+    // serving cost (`queries`) are both auditable from the JSON alone.
     // Warmup entries are independent cold builds, so they run from a
-    // small thread pool (guide §2.6: Spark happily schedules several
-    // jobs at once; the next entry's tasks backfill executors idled by
-    // the current entry's single-threaded tail — kmeans round
-    // boundaries, window sorts). Memo builds are per-key locked
-    // (TextOps.memoLocks) and the Layout writes are object-
-    // synchronized, so concurrent entries cannot double-build or leak.
-    // warmup_secs is now WALL time of the whole block (the honest
-    // driver-budget cost); per-entry seconds remain each entry's own
-    // wall and may sum past the block under overlap.
+    // small thread pool: the next entry's tasks backfill executors idled
+    // by the current entry's single-threaded tail. IndexStore builds are
+    // per-key locked and the Layout writes are object-synchronized, so
+    // concurrent entries cannot double-build or leak. warmup_secs is the
+    // wall time of the whole block; per-entry seconds may sum past it.
     val warmupByEntry = new java.util.concurrent.ConcurrentHashMap[String, Double]()
+    val warmupErrors = new java.util.concurrent.ConcurrentHashMap[String, String]()
     val warmupWall0 = System.nanoTime()
-    // Overlap degree is a measurement knob, not a scale constant: 4
-    // halves warmup wall on this box, but the right value depends on
-    // the box's memory headroom (too much overlap pressures the
-    // storage pool the memo caches land in), so it stays env-tunable.
-    val warmupThreads = sys.env.getOrElse("SPARK_GRAFT_WARMUP_THREADS", "4").toInt
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(warmupThreads)
-    SparkEntry.warmups.foreach { w =>
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(WarmupThreads)
+    warmups.foreach { w =>
       pool.submit(new Runnable {
         def run(): Unit = {
-          val t0 = System.nanoTime()
-          try drive(w, sweep = false) catch { case _: Throwable => () }
-          warmupByEntry.put(w, (System.nanoTime() - t0) / 1e9)
+          val secs = Harness.timed {
+            try drive(w, sweep = false) catch { case e: Throwable =>
+              System.err.println(s"[bench] warmup $w FAILED: ${e.getMessage}")
+              warmupErrors.put(w, e.getClass.getName)
+            }
+          }
+          warmupByEntry.put(w, secs)
         }
       })
     }
@@ -104,20 +74,19 @@ object Bench {
     pool.awaitTermination(30, java.util.concurrent.TimeUnit.MINUTES)
     // one sweep now that every build is done: warmup scratch blocks
     // (iterative-round checkpoints, duplicate-subtree cuts) are dropped
-    // before the timed loop starts; memoized artifacts stay pinned
-    sweepCheckpoints(spark)
-    // Overlapped builds promote far more transient garbage than the
-    // sequential tail did (measured: every timed query ~0.3-0.8 s
-    // slower for the REST OF THE RUN after a threaded warmup — a
-    // session-lifetime tax, not a one-off). One full collection before
-    // the timed loop starts the measurements from a settled heap.
+    // before the timed loop starts; IndexStore frames stay pinned
+    Harness.sweepCheckpoints(spark)
+    // Overlapped builds promote far more transient garbage than a
+    // sequential warmup (measured: every timed query ~0.3-0.8 s slower
+    // for the rest of the run). One full collection before the timed
+    // loop starts the measurements from a settled heap.
     System.gc()
     val warmupSecs = (System.nanoTime() - warmupWall0) / 1e9
     System.err.println(f"[bench] warmup: $warmupSecs%.1f s wall over ${warmupByEntry.size} entries")
     // Per-query instrumentation to stderr as the run progresses:
     // wall seconds plus the session's cumulative GC time delta, so a
     // regression is attributable (slow plan vs collector pressure from
-    // leaked state) from the driver's captured log alone.
+    // leaked state) from the captured log alone.
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._
       // getCollectionTime may return -1 for collectors that don't
@@ -125,12 +94,6 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
     }
-    // Two timed runs per query, report the min: the round-4 driver bench
-    // showed isolated 5–16s spikes (node_graph 16.3s, emb_knn_lsh 14.5s)
-    // on queries that measure <1s in an idle rerun of the same commit —
-    // host contention on the shared driver box, not plan cost. Min-of-2
-    // measures the steady-state plan; both samples go to stderr so a
-    // genuine regression (both runs slow) is still visible.
     // Locale-safe number formatting for every JSON field (the f"%.2f"
     // interpolator is locale-sensitive: comma-decimal locales would
     // emit "pre":1,16 and corrupt the artifact).
@@ -139,8 +102,7 @@ object Bench {
       if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
       else s
     }
-    // Canary probe before and after the timed loop (BenchSanity): the
-    // contaminated-run guard the r9/r11 artifact sagas motivated —
+    // Canary probe before and after the timed loop (BenchSanity):
     // instability ≥ 2 or drift far from 1 marks the artifact as a
     // loaded-box measurement from the JSON alone. A probe that THROWS
     // (broken/unregistered canary) is recorded as failed rather than
@@ -149,10 +111,9 @@ object Bench {
       try {
         // settle the heap first: the canary detects EXTERNAL load, and
         // at larger SFs the session's own accumulated GC debt can land
-        // a multi-hundred-ms pause inside one probe sample (measured:
-        // sf1 post-probe instability 4.2 with drift 1.14 — steady state
-        // intact, one sample eaten by a collection). The probe should
-        // not flag the run for garbage the timed loop already paid for.
+        // a multi-hundred-ms pause inside one probe sample. The probe
+        // should not flag the run for garbage the timed loop already
+        // paid for.
         System.gc()
         Some(BenchSanity.sample(n => drive(n)))
       } catch { case e: Throwable =>
@@ -163,20 +124,27 @@ object Bench {
     canaryPre.foreach(p => System.err.println(
       s"[bench] canary pre: instability ${fmt(BenchSanity.instability(p), 2)}"))
     val gcByQuery = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // Two timed runs per query, report the min: isolated 5–16 s spikes
+    // on queries that measure <1 s in an idle rerun are host contention,
+    // not plan cost. Min-of-2 measures the steady-state plan; both
+    // samples go to stderr so a genuine regression (both runs slow) is
+    // still visible.
+    val results = queries.keys.toSeq.sorted.flatMap { name =>
       val g0 = gcMillis()
-      val samples = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        try drive(name) catch { case e: Throwable =>
+      val samples =
+        try Some((1 to 2).map(_ => Harness.timed(drive(name))))
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          failures(name) = e.getClass.getName
+          None
         }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val secs = samples.min
       val gcDelta = gcMillis() - g0
       gcByQuery(name) = gcDelta
-      System.err.println(f"[bench] $name%-22s ${secs}%8.3f s  (runs: ${samples.map(s => f"$s%.3f").mkString("/")})  gc+$gcDelta%5d ms")
-      name -> secs
+      samples.map { ss =>
+        System.err.println(f"[bench] $name%-22s ${ss.min}%8.3f s  (runs: ${ss.map(s => f"$s%.3f").mkString("/")})  gc+$gcDelta%5d ms")
+        name -> ss.min
+      }
     }.toMap
     val canaryPost = canaryProbe("post")
     val canaryJson = (canaryPre, canaryPost) match {
@@ -219,7 +187,7 @@ object Bench {
     // metric line out of that window (rounds 1–4 all report parsed:null —
     // the full-precision line for 90+ queries is ~2600 chars and its head
     // fell outside the window). Shrink per-query precision until the whole
-    // line fits; full precision still goes to /tmp/bench.json below.
+    // line fits; full precision still goes to the file artifact.
     // "sf0.1" → 0.1: the numeric form keeps the line inside the window
     // (the full dir path costs 24 more chars right at the 2000 limit).
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
@@ -251,28 +219,37 @@ object Bench {
       lineFor(bySlow.take(n).sortBy(_._1), results.size - n, 1)
     }
     println(line)
-    // Full precision to files: /tmp for this run's tooling, and into the
-    // repo so each round's complete per-query numbers are versioned even
-    // when the stdout line had to drop precision or entries.
-    val full = sorted.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    // Full precision to the file artifact, so each run's complete
+    // per-query numbers are versioned even when the stdout line had to
+    // drop precision or entries.
+    val full = queries.keys.toSeq.sorted.map { k =>
+      "\"" + k + "\":" + results.get(k).map(_.toString).getOrElse(
+        s"""{"status":"failed","error":"${failures(k)}"}""")
+    }.mkString("{", ",", "}")
     // per-query GC deltas ride only the file artifact (the stdout line
     // is window-budgeted): collector pressure vs plan cost per query,
     // attributable from the committed JSON alone
-    val gcFull = sorted.map { case (k, _) => "\"" + k + "\":" + gcByQuery.getOrElse(k, 0L) }
+    val gcFull = gcByQuery.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // per-entry warmup wall seconds: the cold-build cost of every
-    // memoized trained artifact, versioned alongside the steady-state
-    // numbers it was moved out of
-    val warmupFull = SparkEntry.warmups
-      .map(w => "\"" + w + "\":" + warmupByEntry.getOrDefault(w, 0.0))
-      .mkString("{", ",", "}")
+    // IndexStore artifact, versioned alongside the steady-state
+    // numbers it was moved out of; a failed entry records its error
+    val warmupFull = warmups.map { w =>
+      val secs = warmupByEntry.getOrDefault(w, 0.0)
+      "\"" + w + "\":" + Option(warmupErrors.get(w)).fold(secs.toString)(e =>
+        s"""{"secs":$secs,"status":"failed","error":"$e"}""")
+    }.mkString("{", ",", "}")
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","cpu":$cpuSecs,"warmup_secs":$warmupSecs,"warmup_by_entry":$warmupFull,$canaryJson,"queries":$full,"gc_ms":$gcFull,"sf":"$sfDir"}"""
+    (fullJson, failures.isEmpty && warmupErrors.isEmpty)
+  }
+
+  /** Writes the artifact twice: a scratch copy for this run's tooling
+    * and the committed `BENCH_FULL.json`.
+    */
+  private def writeArtifact(fullJson: String): Unit = {
     Files.writeString(Paths.get("/tmp/bench.json"), fullJson)
     try Files.writeString(Paths.get("/root/repo/BENCH_FULL.json"), fullJson + "\n")
     catch { case _: Throwable => () }
-    graft.operators.TextOps.release(spark)
-    spark.stop()
   }
 }

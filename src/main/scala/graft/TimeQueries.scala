@@ -1,46 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, expr, xxhash64}
-
 /** Ad-hoc per-query timing harness: `runMain graft.TimeQueries q1 q2 ...`
-  * times just the named registry queries (twice each, min reported — the
-  * same steady-state sampling as [[Bench]]) against
-  * `SPARK_GRAFT_SF_DIR` (default sf0.1). The full [[Bench]] run takes
-  * ~80s across the whole registry; this is the tight loop for iterating
-  * on ONE operator's plan without paying for the other 113.
+  * times just the named registry queries against `SPARK_GRAFT_SF_DIR`
+  * (default sf0.1) with the same loop as [[Bench]]: twice each, min
+  * reported, checkpoint sweep after every run. This is the tight loop
+  * for iterating on ONE operator's plan without running the whole
+  * registry.
   */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_SWEEP=1 mirrors the bench loop's inter-query
-    // checkpoint-block sweep, so a bench-observed interaction between
-    // the sweep and a query's warm path can be reproduced in isolation.
-    val sweep = sys.env.get("SPARK_GRAFT_SWEEP").contains("1")
-    def drive(name: String): Double = {
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.select(xxhash64(df.columns.map(col): _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (sweep) Bench.sweepCheckpoints(spark)
-      dt
-    }
     val names = if (args.nonEmpty) args.toSeq else Seq("q1_pricing_summary")
-    names.foreach { name =>
-      val samples = (1 to 2).map(_ => drive(name))
-      println(f"[time] $name%-22s min ${samples.min}%8.3f s  (runs: ${samples.map(s => f"$s%.3f").mkString("/")})")
+    Harness.withSession { spark =>
+      names.foreach { name =>
+        val samples = (1 to 2).map(_ =>
+          Harness.timed(Harness.drive(SparkEntry.queries(name)(spark, sfDir))))
+        println(f"[time] $name%-22s min ${samples.min}%8.3f s  (runs: ${samples.map(s => f"$s%.3f").mkString("/")})")
+      }
     }
-    graft.operators.TextOps.release(spark)
-    spark.stop()
   }
 }

@@ -21,7 +21,7 @@ object Verify {
       df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       // same inter-query block hygiene as the bench loop: drop the
       // query's transient checkpoint blocks before the next dump
-      Bench.sweepCheckpoints(spark)
+      Harness.sweepCheckpoints(spark)
       true
     } catch { case e: Throwable =>
       Console.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -39,21 +39,22 @@ object Verify {
     // fast path for single-operator iteration (driver passes two args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val ok = Harness.withSession(
+      run(_, sfDir, outDir, SparkEntry.queries, SparkEntry.oracleSql, only))
+    if (!ok) sys.exit(1)
+  }
+
+  /** Dump every query `only` keeps (all when None), then write the
+    * oracle SQL file. A failing dump does not stop the others or the
+    * SQL file; returns whether every dump succeeded.
+    */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame],
+      oracleSql: Map[String, String], only: Option[Set[String]]): Boolean = {
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); set at bootstrap so
-      // table loaders stay side-effect free (see Tables.events).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name)) dumpQuery(spark, name, fn, sfDir, outDir)
+    val failed = queries.collect {
+      case (name, fn) if keep(name) && !dumpQuery(spark, name, fn, sfDir, outDir) => name
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -67,7 +68,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
+    val json = oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     // Filtered runs must not clobber a prior FULL run's oracle_sql.json
     // in the same outDir: a comparator iterating the shrunken key set
@@ -76,7 +77,8 @@ object Verify {
     val jsonName =
       if (only.isEmpty) "oracle_sql.json" else "oracle_sql.partial.json"
     Files.writeString(Paths.get(s"$outDir/$jsonName"), json)
-    graft.operators.TextOps.release(spark)
-    spark.stop()
+    if (failed.nonEmpty)
+      Console.err.println(s"[verify] ${failed.size} dump(s) failed: ${failed.mkString(", ")}")
+    failed.isEmpty
   }
 }

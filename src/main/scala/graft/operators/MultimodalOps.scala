@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{IndexStore, Tables}
 
 /** Multimodal columns: image/audio/video as opaque BINARY payloads with
   * typed metadata, plus the operator set a training-data pipeline runs
@@ -188,10 +188,10 @@ object MultimodalOps {
     // chains derive once per session, not ~6× per run (measured:
     // uncut 6.0 s, per-call lineage cuts 4.2 s, memoized edges the
     // graph-family round-latency floor)
-    val payloadEdges = TextOps.memoized(spark, dir, "media_payload_edges") {
+    val payloadEdges = IndexStore.frame(spark, dir, "media_payload_edges") {
       exactEdges.unionAll(nearEdges)
     }
-    val semEdges = TextOps.memoized(spark, dir, "media_sem_edges") {
+    val semEdges = IndexStore.frame(spark, dir, "media_sem_edges") {
       VectorOps.dedupEmbedding(spark, dir)
         .select(col("vec_a").as("media_a"), col("vec_b").as("media_b"))
     }
@@ -202,7 +202,7 @@ object MultimodalOps {
     // edge frames alone. Inside the memo build, one lineage cut on the
     // symmetrized edges keeps the round plans trivial; after the build
     // every run reads the cached label table.
-    val labels = TextOps.memoized(spark, dir, "media_cc_labels") {
+    val labels = IndexStore.frame(spark, dir, "media_cc_labels") {
       val edges = payloadEdges.unionAll(semEdges)
         .select(col("media_a").as("doc_a"), col("media_b").as("doc_b"))
         .distinct()
@@ -262,7 +262,7 @@ object MultimodalOps {
     // the expensive artifact (payload frame explode + 9 rotation
     // mins), shared between this query and the cross-modal
     // composition ([[mediaSemdedup]]'s payload-signal edges)
-    val sigs = TextOps.memoized(spark, dir, "media_frame_sigs") {
+    val sigs = IndexStore.frame(spark, dir, "media_frame_sigs") {
       mediaFrameSigsFrom(media(spark, dir))
     }
     mediaNearPairsFrom(sigs)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{IndexStore, Tables}
 
 /** General relational operator library (SURVEY.md §2 generalization,
   * §7.2 step 4): the operators a user of the reference would reach for
@@ -2303,6 +2303,21 @@ object Relational {
   /** Result budget for [[q70FrequentPairs]]. */
   val FpTopK = 25
 
+  /** The distinct (order, brand) basket items both frequent-itemset
+    * queries mine, memoized: it feeds four consumers (both self-join
+    * sides, sup, nb) — without the memo the lineitem⋈part distinct
+    * re-evaluates per consumer (the recompute pattern dedupContainment
+    * / the minhash signatures memoize away).
+    */
+  private def fpBaskets(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.frame(spark, dir, "fp_baskets") {
+      Tables.lineitem(spark, dir)
+        .join(broadcast(Tables.part(spark, dir)
+          .select(col("p_partkey"), col("p_brand"))),
+          col("l_partkey") === col("p_partkey"))
+        .select(col("l_orderkey"), col("p_brand")).distinct()
+    }
+
   /** ES `frequent_item_sets` aggregation, pair-sized: market-basket
     * mining over orders as baskets and part BRANDS as items — the
     * top co-occurring brand pairs with support and lift. (ES caps
@@ -2318,17 +2333,7 @@ object Relational {
     * tiebreak.
     */
   def q70FrequentPairs(spark: SparkSession, dir: String): DataFrame = {
-    // memoized: the basket table feeds four consumers (both self-join
-    // sides, sup, nb) — without the memo the lineitem⋈part distinct
-    // re-evaluates per consumer (the recompute pattern dedupContainment
-    // / the minhash signatures memoize away)
-    val items = TextOps.memoized(spark, dir, "fp_baskets") {
-      Tables.lineitem(spark, dir)
-        .join(broadcast(Tables.part(spark, dir)
-          .select(col("p_partkey"), col("p_brand"))),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("l_orderkey"), col("p_brand")).distinct()
-    }
+    val items = fpBaskets(spark, dir)
     val pairs = items.as("a")
       .join(items.as("b"),
         col("a.l_orderkey") === col("b.l_orderkey") &&
@@ -2373,13 +2378,7 @@ object Relational {
     * division of exact integer counts).
     */
   def q76FrequentTriples(spark: SparkSession, dir: String): DataFrame = {
-    val items = TextOps.memoized(spark, dir, "fp_baskets") {
-      Tables.lineitem(spark, dir)
-        .join(broadcast(Tables.part(spark, dir)
-          .select(col("p_partkey"), col("p_brand"))),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("l_orderkey"), col("p_brand")).distinct()
-    }
+    val items = fpBaskets(spark, dir)
     val sup = items.groupBy(col("p_brand")).agg(count(lit(1)).as("s"))
       // lossless Apriori prune: a triple with support ≥ m needs every
       // item's support ≥ m

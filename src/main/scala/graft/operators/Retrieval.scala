@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.IndexStore
+
 /** Hybrid retrieval: lexical (BM25) and vector (exact cosine KNN)
   * rankings fused by Reciprocal Rank Fusion (Cormack, Clarke &
   * Buettcher 2009) — the standard two-tower serving shape (the
@@ -104,18 +106,18 @@ object Retrieval {
     */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
     val oml = 1 - MmrLambda
-    // both inputs are memoized artifacts (the TextOps.memoized
-    // discipline): the candidate list is a view over the already-
-    // memoized exact baseline, and the k²·|Q| pairwise-cosine table is
-    // built once per session — the 5 greedy steps then run entirely
+    // both inputs are IndexStore frames: the candidate list is a view
+    // over the already-memoized exact baseline, and the k²·|Q|
+    // pairwise-cosine table is built once per session — the 5 greedy
+    // steps then run entirely
     // over cached small frames instead of re-joining the vector store
     // per reference
-    val cands = TextOps.memoized(spark, dir, "mmr_cands") {
+    val cands = IndexStore.frame(spark, dir, "mmr_cands") {
       VectorOps.knnExact(spark, dir)
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           col("sim").as("rel"))
     }
-    val pairs = TextOps.memoized(spark, dir, "mmr_pairs") {
+    val pairs = IndexStore.frame(spark, dir, "mmr_pairs") {
       val vecs = VectorOps.withNorm(spark, dir)
       cands.select(col("query_id"), col("doc_id").as("a"))
         .join(cands.select(col("query_id"), col("doc_id").as("b")), Seq("query_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{IndexStore, Tables}
 
 /** Text-analysis and deduplication operators for large-scale training-data
   * pipelines, over the `documents` table.
@@ -18,137 +18,6 @@ import graft.sources.Tables
   * operator here is DuckDB-oracle checkable.
   */
 object TextOps {
-
-  /** Registry of the dedup family's shared persisted artifacts
-    * (minhash signatures, LSH edge set), memoized per (session, dir).
-    *
-    * Round 2 persisted these inside every operator call and never
-    * released them: each call built a fresh DataFrame, so a 75-query
-    * bench/verify session pinned a new MEMORY_AND_DISK copy per
-    * invocation and the block manager accumulated dead entries for the
-    * whole run (the measured cause of the round-2 bench regression —
-    * every query alphabetically after corpus_curation slowed 2-20×).
-    * Memoizing means the six dedup-family queries share ONE cached
-    * signature table and ONE edge set — the in-session analog of
-    * writing the signature table out once at cluster scale — and
-    * [[release]] gives the session an explicit end-of-pipeline hook.
-    */
-  // Lifecycle note: a weak-keyed map would NOT work here — the
-  // persisted DataFrame value strongly references its SparkSession
-  // (via queryExecution), so the key never becomes weakly reachable
-  // (the WeakHashMap value→key pitfall). Instead: strong entries keyed
-  // by session UUID, an explicit [[release]] hook (Verify/Bench call it
-  // before stop), and a sweep on every access that drops entries whose
-  // SparkContext has stopped — a stopped context's blocks are already
-  // gone, so the sweep only frees driver-side references. A live
-  // session that never calls release keeps its two small cached tables:
-  // that is the memoization working, not a leak.
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), (SparkSession, DataFrame)]
-
-  /** Stable per-session key: sessions are compared by object identity
-    * (Spark 4.1.2's SparkSession exposes no session UUID), so the
-    * identity hash code is the natural memo key component.
-    */
-  private def sessionKey(spark: SparkSession): String =
-    System.identityHashCode(spark).toString
-
-  private def sweepStopped(): Unit =
-    memo.filterInPlace { case (_, (s, _)) => !s.sparkContext.isStopped }
-
-  /** Per-key build locks: Bench's warmup drives entries from a small
-    * thread pool (guide §2.6 — overlap independent jobs so one entry's
-    * straggler tail backfills with the next entry's tasks), and a bare
-    * TrieMap.getOrElseUpdate under that concurrency can evaluate
-    * `build` twice for one key — the loser's persisted (sometimes
-    * eagerly checkpointed) frame would leak unpersisted for the
-    * session. One lock per key serializes only same-key builders;
-    * different artifacts still build concurrently. Lock objects are
-    * tiny and never removed (bounded by the artifact-key space).
-    */
-  private val memoLocks = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), Object]
-
-  private[graft] def memoized(spark: SparkSession, dir: String, key: String)
-      (build: => DataFrame): DataFrame = {
-    sweepStopped()
-    val k = (sessionKey(spark), dir, key)
-    memo.get(k) match {
-      case Some((_, df)) => df
-      case None =>
-        val lock = memoLocks.getOrElseUpdate(k, new Object)
-        lock.synchronized {
-          memo.getOrElseUpdate(k,
-            (spark, build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))._2
-        }
-    }
-  }
-
-  /** Unpersist and forget every memoized artifact of `spark` — the
-    * end-of-pipeline hook Verify/Bench call before session stop.
-    *
-    * Sibling-session subtlety: the CacheManager lives in SharedState,
-    * so two sessions of one SparkContext that memoize the same
-    * (dir, key) share ONE cache entry (same canonicalized plan).
-    * Unpersisting unconditionally would silently unpin the artifact a
-    * SIBLING's memo still advertises as cached (measured: the sibling's
-    * storageLevel drops to NONE). Blocks are released only when no
-    * other session's entry still references the same (dir, key).
-    */
-  def release(spark: SparkSession): Unit = {
-    val mine = sessionKey(spark)
-    memo.keys.filter(_._1 == mine).foreach { k =>
-      memo.remove(k).foreach { case (_, df) =>
-        val sharedWithLiveSibling = memo.keys.exists(o =>
-          o._1 != mine && o._2 == k._2 && o._3 == k._3)
-        if (!sharedWithLiveSibling) df.unpersist(blocking = false)
-      }
-    }
-    bm25StatsCache.filterInPlace { case ((s, _), _) => s != mine }
-  }
-
-  /** Persistent-RDD ids this session's memoized artifacts DEPEND on:
-    * the localCheckpoint RDDs their plans scan (LogicalRDD leaves —
-    * the "plan-size cut under the memo persist" device). A checkpoint
-    * block is the ONLY copy of its partition, so the bench/verify
-    * inter-query block sweep ([[Bench]]) must never unpersist one of
-    * these: a memo cache partition that later recomputes (eviction,
-    * multi-session sharing) would fail with a missing-block error
-    * instead of rebuilding. Everything ELSE locally checkpointed is
-    * per-query transient by construction in this library (iterative
-    * cutLineage rounds, duplicate-subtree cuts) and safe to drop once
-    * the query's action has returned.
-    */
-  private[graft] def memoPinnedRddIds(spark: SparkSession): Set[Int] = {
-    val mine = sessionKey(spark)
-    memo.readOnlySnapshot().collect { case ((s, _, _), (_, df)) if s == mine => df }
-      .flatMap { df =>
-        df.queryExecution.analyzed.collect {
-          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-        }
-      }.toSet
-  }
-
-  /** Test-only visibility into the memo lifecycle (TextOpsSpec's
-    * multi-session stress test): entry count for a given session and
-    * overall, after a sweep.
-    */
-  private[graft] def memoEntriesFor(spark: SparkSession): Int = {
-    sweepStopped()
-    memo.keys.count(_._1 == sessionKey(spark))
-  }
-
-  /** The artifact KEYS this session has memoized — WarmupSpec asserts
-    * the bench warmup list touches every one of them (registration
-    * happens at plan-construction time inside [[memoized]], so the
-    * test can enumerate artifacts without executing the registry).
-    */
-  private[graft] def memoKeysFor(spark: SparkSession): Set[String] = {
-    sweepStopped()
-    val mine = sessionKey(spark)
-    memo.keys.collect { case (s, _, k) if s == mine => k }.toSet
-  }
-  private[graft] def memoEntriesTotal: Int = { sweepStopped(); memo.size }
 
   /** Whitespace tokenization shared by all text operators — and by the
     * streaming twins (StreamingVocab): one definition, so a tokenizer
@@ -385,7 +254,7 @@ object TextOps {
     // the merge table is memoized like the library's other trained
     // artifacts: a tokenizer owner trains once and every consumer
     // mounts the table (the 8-round build lands in the warmup)
-    memoized(spark, dir, "bpe_merge_table") {
+    IndexStore.frame(spark, dir, "bpe_merge_table") {
       bpeTrainFromDict(withWords(spark, dir)
         .select(explode(col("words")).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("f")))
@@ -503,7 +372,7 @@ object TextOps {
   def unigramTrain(spark: SparkSession, dir: String): DataFrame =
     // memoized trained artifact (the bpe_merge_table rationale); the
     // encoder reads THIS table, so train + encode share one build
-    memoized(spark, dir, "unigram_vocab_ranked") {
+    IndexStore.frame(spark, dir, "unigram_vocab_ranked") {
       unigramTrainFrom(Tables.documents(spark, dir))
     }
 
@@ -894,7 +763,7 @@ object TextOps {
     expr(s"CAST(conv($prefix15, 16, 10) AS BIGINT)")
   }
 
-  // Materialized via [[memoized]]: the signature table is the shared
+  // Materialized via IndexStore.frame: the signature table is the shared
   // artifact of the whole dedup family (LSH pairing, Jaccard verify,
   // fuzzy verify) and both sides of the LSH self-join; Spark's
   // plan-level exchange reuse does NOT deduplicate the two sides
@@ -903,7 +772,7 @@ object TextOps {
   // than the corpus — at cluster scale you write them to a table;
   // one in-session MEMORY_AND_DISK persist is the same move.
   def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "minhash_sigs") {
+    IndexStore.frame(spark, dir, "minhash_sigs") {
       minhashSignaturesFrom(Tables.documents(spark, dir))
     }
 
@@ -1182,6 +1051,19 @@ object TextOps {
     */
   val CcRounds = 3
 
+  /** The symmetrized LSH candidate-pair edge set every clustering
+    * variant propagates over. Edges are iteration-invariant: materialize
+    * them once instead of re-deriving the whole LSH pipeline inside
+    * every propagation round (any iterative graph algorithm on Spark
+    * must pin its edge set).
+    */
+  private def lshEdges(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.frame(spark, dir, "lsh_edges") {
+      val pairs = dedupMinhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
+      pairs.unionAll(
+        pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    }
+
   /** Near-duplicate CLUSTERS from LSH candidate pairs via bounded
     * min-label propagation (connected components): every doc in a pair
     * graph gets the minimum doc_id of its component as cluster id — the
@@ -1189,19 +1071,12 @@ object TextOps {
     * filter downstream. Each round: neighbor-min join + least() update.
     */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    // edges are iteration-invariant: materialize them once instead of
-    // re-deriving the whole LSH pipeline inside every propagation round
-    // (any iterative graph algorithm on Spark must pin its edge set)
-    val edges = memoized(spark, dir, "lsh_edges") {
-      val pairs = dedupMinhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-      pairs.unionAll(
-        pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    }
+    val edges = lshEdges(spark, dir)
     // the propagated labels are themselves a shared artifact: both the
     // standalone clusters query and corpus_curation's near-dup-loser
     // stage consume them, and each CC round re-reads them — one more
     // memoized table keeps the rounds' lineage from re-running
-    val labels = memoized(spark, dir, "cc_labels") {
+    val labels = IndexStore.frame(spark, dir, "cc_labels") {
       propagateBounded(edges)
     }
     labels.select(
@@ -1300,11 +1175,7 @@ object TextOps {
   }
 
   def dedupClustersFixpoint(spark: SparkSession, dir: String): DataFrame = {
-    val edges = memoized(spark, dir, "lsh_edges") {
-      val pairs = dedupMinhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-      pairs.unionAll(
-        pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    }
+    val edges = lshEdges(spark, dir)
     propagateToFixpoint(edges).select(
       col("node").as("doc_id"),
       col("label").as("cluster_id"),
@@ -1322,11 +1193,7 @@ object TextOps {
     * different algorithm, not just a different round count.
     */
   def dedupClustersStar(spark: SparkSession, dir: String): DataFrame = {
-    val edges = memoized(spark, dir, "lsh_edges") {
-      val pairs = dedupMinhashLsh(spark, dir).select(col("doc_a"), col("doc_b"))
-      pairs.unionAll(
-        pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    }
+    val edges = lshEdges(spark, dir)
     val (labels, _) = GraphOps.starContract(edges)
     labels.select(
       col("node").as("doc_id"),
@@ -1415,32 +1282,32 @@ object TextOps {
     // query instance even with every byte cached (measured). The cut
     // flattens each stage to a LogicalRDD, so downstream plans are
     // one join layer deep and planning is milliseconds.
-    val base = memoized(spark, dir, "export_base") {
+    val base = IndexStore.frame(spark, dir, "export_base") {
       cutLineage(exportBaseFrom(Tables.documents(spark, dir)))
     }
-    val s1 = memoized(spark, dir, "export_s1") {
+    val s1 = IndexStore.frame(spark, dir, "export_s1") {
       val q = quality(spark, dir)
         .where(col("n_words") >= MinWords && col("uniq_ratio") >= MinUniqRatio)
         .select(col("doc_id"))
       cutLineage(base.join(q, Seq("doc_id"), "left_semi"))
     }
-    val s2 = memoized(spark, dir, "export_s2") {
+    val s2 = IndexStore.frame(spark, dir, "export_s2") {
       cutLineage(s1.join(
         dedupExact(spark, dir).select(col("canonical_doc_id").as("doc_id")),
         Seq("doc_id"), "left_semi"))
     }
-    val s3 = memoized(spark, dir, "export_s3") {
+    val s3 = IndexStore.frame(spark, dir, "export_s3") {
       cutLineage(s2.join(
         dedupClusters(spark, dir).where(col("doc_id") =!= col("cluster_id"))
           .select(col("doc_id")),
         Seq("doc_id"), "left_anti"))
     }
-    val s4 = memoized(spark, dir, "export_s4") {
+    val s4 = IndexStore.frame(spark, dir, "export_s4") {
       cutLineage(s3.join(
         decontaminate(spark, dir).where(col("keep")).select(col("doc_id")),
         Seq("doc_id"), "left_semi"))
     }
-    val s5 = memoized(spark, dir, "export_s5") {
+    val s5 = IndexStore.frame(spark, dir, "export_s5") {
       cutLineage(mixSampleFrom(s4))
     }
     Seq("corpus" -> base, "quality" -> s1, "dedup_exact" -> s2,
@@ -1620,7 +1487,7 @@ object TextOps {
     * doc-frequency relation.
     */
   private[graft] def postingsIndex(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "postings_index") {
+    IndexStore.frame(spark, dir, "postings_index") {
       withWords(spark, dir)
         .select(col("doc_id"), explode(col("words")).as("term"))
         .groupBy(col("doc_id"), col("term"))
@@ -1636,7 +1503,7 @@ object TextOps {
     * pays, without the aggregate.
     */
   private[graft] def positionsIndex(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "positions_index") {
+    IndexStore.frame(spark, dir, "positions_index") {
       withWords(spark, dir)
         .select(col("doc_id"),
           posexplode(col("words")).as(Seq("pos0", "term")))
@@ -1802,7 +1669,7 @@ object TextOps {
     * count(dl)/sum(dl) skip them, the cross-engine convention).
     */
   private[graft] def docLenIndex(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "doclen_index") {
+    IndexStore.frame(spark, dir, "doclen_index") {
       withWords(spark, dir)
         .select(col("doc_id"), size(col("words")).as("dl"))
     }
@@ -1821,7 +1688,7 @@ object TextOps {
     * the restriction never changes a term's own row count).
     */
   private[graft] def termStats(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "term_stats") {
+    IndexStore.frame(spark, dir, "term_stats") {
       postingsIndex(spark, dir)
         .groupBy(col("term"))
         .agg(count(lit(1)).as("df"), sum(col("tf")).as("freq"))
@@ -1829,26 +1696,23 @@ object TextOps {
 
   /** Index-level BM25 statistics (document count, total token count)
     * collected ONCE per (session, dir) from the memoized
-    * [[docLenIndex]] — the [[graft.operators.VectorOps]] dialCache
-    * device: a deployment stores these two numbers in the index stats
-    * block, it does not re-aggregate doc lengths per query. The one
+    * [[docLenIndex]] and held as an [[IndexStore.value]]: a deployment
+    * stores these two numbers in the index stats block, it does not
+    * re-aggregate doc lengths per query. The one
     * collect job per session reads the already-cached sidecar (never
     * an extra corpus scan), and the values embed as literals so each
     * tower drops both the 1-row stats aggregate and its broadcast
     * round-trip. count/sum skip null-dl docs exactly like the frame
     * aggregate they replace.
     */
-  private val bm25StatsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Long, Long)]
-
   private[graft] def bm25Stats(spark: SparkSession, dir: String): (Long, Long) =
-    bm25StatsCache.getOrElseUpdate((sessionKey(spark), dir), {
+    IndexStore.value(spark, dir, "bm25_stats") {
       val r = docLenIndex(spark, dir)
         .agg(count(col("dl")).as("n_docs"), sum(col("dl")).as("dl_sum"))
         .head()
       // sum() is NULL on an empty corpus (count 0) — read it null-safe
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    })
+    }
 
   def tfidf(spark: SparkSession, dir: String): DataFrame =
     tfidfTopTerms(spark, dir)
@@ -1864,7 +1728,7 @@ object TextOps {
     * rows, cold cost accounted in warmup like every stored artifact.
     */
   private[graft] def termVectors(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "term_vectors") { tfidfTopTerms(spark, dir) }
+    IndexStore.frame(spark, dir, "term_vectors") { tfidfTopTerms(spark, dir) }
 
   private def tfidfTopTerms(spark: SparkSession, dir: String): DataFrame = {
     // Corpus size as a broadcast 1-row aggregate (the q20ScalarSubquery
@@ -3155,7 +3019,7 @@ object TextOps {
     * first).
     */
   private def containShingles(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "contain_shingles") {
+    IndexStore.frame(spark, dir, "contain_shingles") {
       withShingles(spark, dir)
         .select(col("doc_id"), explode(col("shingles")).as("sg"))
         .select(col("doc_id"), rotLong("md5(sg)", 0).as("h"))
@@ -3167,7 +3031,7 @@ object TextOps {
     * memo key).
     */
   private def containBlocks(spark: SparkSession, dir: String): DataFrame =
-    memoized(spark, dir, "contain_blocks") {
+    IndexStore.frame(spark, dir, "contain_blocks") {
       val w = ContainBlockWidth
       withWordsAttr(spark, dir)
         .where(size(col("words")) >= w)
@@ -3400,8 +3264,8 @@ object TextOps {
     // single join, with the stats embedded as literals. The df values
     // are identical to the per-query re-aggregate (restricting postings
     // to the query vocabulary never changes a term's own row count) and
-    // the scoring arithmetic is the [[bm25CgTable]] expression tree
-    // verbatim, so every score is bit-identical.
+    // the scoring arithmetic is [[withBm25Cg]], shared with
+    // [[bm25CgTable]], so every score is bit-identical.
     val (nDocs, dlSum) = bm25Stats(spark, dir)
     val qdf = termStats(spark, dir)
       .join(broadcast(queries), Seq("term"))
@@ -3410,18 +3274,9 @@ object TextOps {
     // DIVIDE_BY_ZERO under ANSI on an empty corpus (value irrelevant
     // there — the postings join yields no rows)
     val avgdl = lit(if (nDocs == 0L) 1.0 else dlSum.toDouble / nDocs)
-    val cg = postingsIndex(spark, dir)
+    val cg = withBm25Cg(postingsIndex(spark, dir)
       .join(broadcast(qdf), Seq("term"))
-      .join(docLenIndex(spark, dir), Seq("doc_id"))
-      .withColumn("idf",
-        (lit(nDocs).cast("double") - col("df").cast("double") + lit(0.5)) /
-          (col("df").cast("double") + lit(0.5)) + lit(1.0))
-      .withColumn("norm",
-        lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl))
-      .withColumn("cg",
-        floor(col("idf") * ((col("tf").cast("double") * lit(2.2)) /
-          (col("tf").cast("double") + lit(1.2) * col("norm"))) *
-          expr(Bm25Grid)).cast("long"))
+      .join(docLenIndex(spark, dir), Seq("doc_id")), lit(nDocs), avgdl)
     // one exchange for aggregate AND window: hash(query_id) clusters
     // (query_id, doc_id) groups too, so the rank window reuses the
     // aggregate's partitioning instead of re-shuffling (ClusteredDistribution
@@ -3439,39 +3294,42 @@ object TextOps {
         col("score"), col("n_matched"))
   }
 
-  /** [[bm25Ranked]] over materialized index relations — `tf` is a
-    * (doc_id, term, tf) postings relation already restricted to the
-    * query vocabulary, `docLens` a (doc_id, dl) length relation. The
-    * seam the INCREMENTAL index reads through:
-    * [[graft.streaming.StreamingRetrieval]] rebuilds both from its
-    * per-batch stores and gets scoring bit-identical to the batch
-    * operator, because every downstream step (df, idf, the integer
-    * grid) runs HERE, off the same relations.
+  /** The BM25 arithmetic, the one definition every scorer uses: adds
+    * `idf`, `norm` and the per-(doc, term) grid contribution `cg` to a
+    * (doc_id, term, tf, df, dl) relation. The corpus statistics come in
+    * as Columns — literals on the index path ([[bm25Ranked]]), columns
+    * of a broadcast stats row on the relation path ([[bm25CgTable]]) —
+    * so both paths build the identical expression tree.
     */
+  private def withBm25Cg(postings: DataFrame, nDocs: Column,
+      avgdl: Column): DataFrame =
+    postings
+      .withColumn("idf",
+        (nDocs.cast("double") - col("df").cast("double") + lit(0.5)) /
+          (col("df").cast("double") + lit(0.5)) + lit(1.0))
+      .withColumn("norm",
+        lit(0.25) + lit(0.75) * (col("dl").cast("double") / avgdl))
+      .withColumn("cg",
+        floor(col("idf") * ((col("tf").cast("double") * lit(2.2)) /
+          (col("tf").cast("double") + lit(1.2) * col("norm"))) *
+          expr(Bm25Grid)).cast("long"))
+
   /** The per-(doc, term) BM25 grid contribution (`cg`) relation shared
     * by [[bm25RankedFrom]] (per-query ranking) and [[bm25ScoreTable]]
-    * (per-doc total) — ONE definition of the scoring arithmetic, so a
-    * ranked read and a score-table read can never drift.
+    * (per-doc total), with df and the corpus statistics aggregated from
+    * the given relations.
     */
   private def bm25CgTable(tf: DataFrame, docLens: DataFrame): DataFrame = {
     // count(dl)/sum(dl) both skip null-text docs on both engines
     val stats = docLens.agg(
       count(col("dl")).as("n_docs"), sum(col("dl")).as("dl_sum"))
     val dfq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    tf.join(broadcast(dfq), Seq("term"))
+    withBm25Cg(tf.join(broadcast(dfq), Seq("term"))
       .join(docLens, Seq("doc_id"))
       .crossJoin(broadcast(stats))
       .withColumn("avgdl",
-        col("dl_sum").cast("double") / col("n_docs").cast("double"))
-      .withColumn("idf",
-        (col("n_docs").cast("double") - col("df").cast("double") + lit(0.5)) /
-          (col("df").cast("double") + lit(0.5)) + lit(1.0))
-      .withColumn("norm",
-        lit(0.25) + lit(0.75) * (col("dl").cast("double") / col("avgdl")))
-      .withColumn("cg",
-        floor(col("idf") * ((col("tf").cast("double") * lit(2.2)) /
-          (col("tf").cast("double") + lit(1.2) * col("norm"))) *
-          expr(Bm25Grid)).cast("long"))
+        col("dl_sum").cast("double") / col("n_docs").cast("double")),
+      col("n_docs"), col("avgdl"))
   }
 
   /** Per-DOC total BM25 score over ONE term set (no query relation, no
@@ -3485,6 +3343,15 @@ object TextOps {
       .groupBy(col("doc_id"))
       .agg(sum(col("cg")).as("score"), count(lit(1)).as("n_matched"))
 
+  /** [[bm25Ranked]] over materialized index relations — `tf` is a
+    * (doc_id, term, tf) postings relation already restricted to the
+    * query vocabulary, `docLens` a (doc_id, dl) length relation. The
+    * seam the INCREMENTAL index reads through:
+    * [[graft.streaming.StreamingRetrieval]] rebuilds both from its
+    * per-batch stores and gets scoring bit-identical to the batch
+    * operator, because every downstream step (df, idf, the integer
+    * grid) runs HERE, off the same relations.
+    */
   private[graft] def bm25RankedFrom(tf: DataFrame, docLens: DataFrame,
       queries: DataFrame, excludeSelf: Boolean): DataFrame = {
     val joined = bm25CgTable(tf, docLens).join(broadcast(queries), Seq("term"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{IndexStore, Tables}
 
 /** Embedding similarity search over the `embeddings` table
   * (vec_id BIGINT, embedding ARRAY<FLOAT>, label INT).
@@ -213,7 +213,7 @@ object VectorOps {
     * caching cannot change any consumer's output.
     */
   def knnExact(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "knn_exact") {
+    IndexStore.frame(spark, dir, "knn_exact") {
       val base = withNorm(spark, dir)
       val q = base.where(col("vec_id") % QueryMod === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
@@ -565,7 +565,7 @@ object VectorOps {
     */
   def dedupEmbeddingClusters(spark: SparkSession, dir: String,
       numPlanes: Int = NumPlanes, bandBits: Int = BandBits): DataFrame = {
-    val edges = TextOps.memoized(spark, dir, "emb_lsh_edges") {
+    val edges = IndexStore.frame(spark, dir, "emb_lsh_edges") {
       val pairs = dedupEmbedding(spark, dir, numPlanes, bandBits)
         .select(col("vec_a"), col("vec_b"))
       pairs.unionAll(
@@ -574,7 +574,7 @@ object VectorOps {
     // the propagated labels are a shared artifact too (mirrors the
     // text family's cc_labels): memoizing caps the unrolled rounds'
     // lineage at one computation per session
-    val labels = TextOps.memoized(spark, dir, "emb_cc_labels") {
+    val labels = IndexStore.frame(spark, dir, "emb_cc_labels") {
       val nodes = edges.select(col("vec_a").as("node")).distinct()
       var l = nodes.withColumn("label", col("node"))
       for (_ <- 1 to TextOps.CcRounds) {
@@ -803,7 +803,7 @@ object VectorOps {
     * once by an offline training job).
     */
   def centroidsRaw(spark: SparkSession, dir: String, nlist: Int = NList): DataFrame =
-    TextOps.memoized(spark, dir, s"ivf_means_$nlist") {
+    IndexStore.frame(spark, dir, s"ivf_means_$nlist") {
       trainMeans(Tables.embeddings(spark, dir), nlist)
     }
 
@@ -869,7 +869,7 @@ object VectorOps {
     // memoized: the trained codebook is the IVF family's shared
     // artifact (assign, search, recall all broadcast it) — ≤nlist rows,
     // the in-session analog of writing the codebook out once at scale
-    TextOps.memoized(spark, dir, s"ivf_centroids_$nlist") {
+    IndexStore.frame(spark, dir, s"ivf_centroids_$nlist") {
       vectorsFromMeans(centroidsRaw(spark, dir, nlist))
     }
 
@@ -899,12 +899,12 @@ object VectorOps {
   }
 
   /** The corpus count behind the dials — one planning-scale action
-    * (parquet footer row counts), memoized per session like the
-    * Layout file index.
+    * (parquet footer row counts), held once per (session, dir).
     */
-  private val dialCache = new java.util.concurrent.ConcurrentHashMap[String, Long]()
   private def corpusCount(spark: SparkSession, dir: String): Long =
-    dialCache.computeIfAbsent(dir, _ => Tables.embeddings(spark, dir).count())
+    IndexStore.value(spark, dir, "ivf_corpus_count") {
+      Tables.embeddings(spark, dir).count()
+    }
 
   /** The chosen dials as a 1-row gauge (n_vectors, nlist, sample_mod,
     * nprobe) — the observable contract of the auto-sizing rule, so a
@@ -949,7 +949,7 @@ object VectorOps {
     */
   private[graft] def centroidVectorsAuto(spark: SparkSession, dir: String): DataFrame = {
     val n = corpusCount(spark, dir)
-    TextOps.memoized(spark, dir, "ivf_auto_centroids") {
+    IndexStore.frame(spark, dir, "ivf_auto_centroids") {
       centroidVectorsAutoFrom(Tables.embeddings(spark, dir), n)
     }
   }
@@ -959,7 +959,7 @@ object VectorOps {
     * offline indexing job every ANN store runs).
     */
   def ivfAssignAuto(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "ivf_auto_assign") {
+    IndexStore.frame(spark, dir, "ivf_auto_assign") {
       nearestCentroids(withNorm(spark, dir),
         centroidVectorsAuto(spark, dir), nearest = 1)
         .select(col("vec_id"), col("label"),
@@ -1107,7 +1107,7 @@ object VectorOps {
     * would otherwise each re-run the corpus-wide argmax.
     */
   def ivfAssign(spark: SparkSession, dir: String, nlist: Int = NList): DataFrame =
-    TextOps.memoized(spark, dir, s"ivf_assign_$nlist") {
+    IndexStore.frame(spark, dir, s"ivf_assign_$nlist") {
       nearestCentroids(withNorm(spark, dir), centroidVectors(spark, dir, nlist),
         nearest = 1)
         .select(col("vec_id"), col("label"),
@@ -1150,7 +1150,7 @@ object VectorOps {
     * persisting it next to the index at scale.
     */
   private def sq8Stats(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "sq8_stats") {
+    IndexStore.frame(spark, dir, "sq8_stats") {
       Tables.embeddings(spark, dir)
         .select(posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy(col("pos"))
@@ -1192,7 +1192,7 @@ object VectorOps {
     * here because the in-session memo stands in for that scan.
     */
   private def sq8Codes(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "sq8_codes") {
+    IndexStore.frame(spark, dir, "sq8_codes") {
       withNorm(spark, dir)
         .crossJoin(broadcast(sq8Stats(spark, dir)))
         .withColumn("code", expr(sq8CodeExpr("embedding")))
@@ -1263,7 +1263,7 @@ object VectorOps {
     * scale the 8-byte code is written next to the vector at ingest.
     */
   private def bqCodes(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "bq_codes") {
+    IndexStore.frame(spark, dir, "bq_codes") {
       graft.plans.GraftExtensions.register(spark)
       withNorm(spark, dir)
         .select(col("vec_id"), col("embedding"), col("nrm"),
@@ -1534,7 +1534,7 @@ object VectorOps {
     * the codebook artifact once.
     */
   private[graft] def pqCodebook(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "pq_codebook") {
+    IndexStore.frame(spark, dir, "pq_codebook") {
       val sums = pqSubs(spark, dir)
         .select(col("m"), col("cell"), posexplode(col("sub")).as(Seq("pos", "val")))
         .groupBy(col("m"), col("cell"), col("pos"))
@@ -1569,7 +1569,7 @@ object VectorOps {
     * stand in for that storage layout in-session.
     */
   private[graft] def pqCodes(spark: SparkSession, dir: String): DataFrame =
-    TextOps.memoized(spark, dir, "pq_codes") {
+    IndexStore.frame(spark, dir, "pq_codes") {
       val l2 =
         """aggregate(zip_with(sub, centroid, (x, y) ->
           |  (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),
@@ -1672,7 +1672,7 @@ object VectorOps {
     * both scan it.
     */
   private def ivfResiduals(spark: SparkSession, dir: String, nlist: Int): DataFrame =
-    TextOps.memoized(spark, dir, s"ivfpq_residuals_$nlist") {
+    IndexStore.frame(spark, dir, s"ivfpq_residuals_$nlist") {
       ivfAssign(spark, dir, nlist)
         .select(col("vec_id"), col("assigned_label"))
         .join(Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
@@ -1709,7 +1709,7 @@ object VectorOps {
     * residual space.
     */
   private[graft] def pqrCodebook(spark: SparkSession, dir: String, nlist: Int = NList): DataFrame =
-    TextOps.memoized(spark, dir, s"pqr_codebook_$nlist") {
+    IndexStore.frame(spark, dir, s"pqr_codebook_$nlist") {
       val sums = pqrSubs(spark, dir, nlist)
         .select(col("m"), col("cell"), posexplode(col("sub")).as(Seq("pos", "val")))
         .groupBy(col("m"), col("cell"), col("pos"))
@@ -1733,7 +1733,7 @@ object VectorOps {
     * rnrm) are stored; v̂ is encode-time scratch.
     */
   private[graft] def pqrCodes(spark: SparkSession, dir: String, nlist: Int = NList): DataFrame =
-    TextOps.memoized(spark, dir, s"pqr_codes_$nlist") {
+    IndexStore.frame(spark, dir, s"pqr_codes_$nlist") {
       val l2 =
         """aggregate(zip_with(sub, centroid, (x, y) ->
           |  (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),
@@ -2189,7 +2189,7 @@ object VectorOps {
     */
   def knnGraph(spark: SparkSession, dir: String,
       numPlanes: Int = NumPlanes, bandBits: Int = BandBits): DataFrame =
-    TextOps.memoized(spark, dir, "knn_graph") {
+    IndexStore.frame(spark, dir, "knn_graph") {
       graft.plans.GraftExtensions.register(spark)
       val bands = Tables.embeddings(spark, dir).select(
         col("vec_id"),
@@ -2316,7 +2316,7 @@ object VectorOps {
   def knnGraphBeam(spark: SparkSession, dir: String,
       numPlanes: Int = NumPlanes, bandBits: Int = BandBits,
       rounds: Int = BeamRounds): DataFrame =
-    TextOps.memoized(spark, dir, s"knn_graph_beam_$rounds") {
+    IndexStore.frame(spark, dir, s"knn_graph_beam_$rounds") {
       graft.plans.GraftExtensions.register(spark)
       val base = withNorm(spark, dir)
       val queries = broadcast(base.where(col("vec_id") % QueryMod === 0)

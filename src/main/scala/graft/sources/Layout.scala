@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *     not the table's.
   *
   * Writes are per-JVM memoized (same build-once-per-session policy as
-  * TextOps.memoized artifacts) and land under java.io.tmpdir keyed by
+  * IndexStore artifacts) and land under java.io.tmpdir keyed by
   * the source dir, so every scale factor gets its own layout copy.
   */
 object Layout {
@@ -245,7 +245,7 @@ object Layout {
   private[graft] def bloomFileIndex(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftExtensions.register(spark)
     val (path, schema) = bloomClusteredEvents(spark, dir)
-    graft.operators.TextOps.memoized(spark, dir, "bloom_file_index") {
+    IndexStore.frame(spark, dir, "bloom_file_index") {
       val src = spark.read.schema(schema).parquet(path)
       // size each file's filter from the ACTUAL per-file row estimate
       // (total rows / files, +25% range-partition skew headroom) at a

@@ -1,7 +1,7 @@
 package org.apache.spark.rdd
 
 /** Accessor for `RDD.isLocallyCheckpointed`, which is `private[spark]`.
-  * The bench/verify inter-query block sweep (graft.Bench.sweepCheckpoints)
+  * The bench/verify inter-query block sweep (graft.Harness.sweepCheckpoints)
   * needs to distinguish localCheckpoint blocks (transient per-query
   * lineage cuts it should reclaim) from Dataset-cache blocks backing
   * memoized artifacts (session-lifetime, must survive) — both report

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, expr, xxhash64}
-
 /** The contaminated-run guard: warmed canaries are steady-state on
   * this (test-time) box, and the instability/drift arithmetic flags
   * exactly the loaded-box signature the r9/r11 artifacts showed.
@@ -12,12 +10,7 @@ class BenchSanitySpec extends SparkSpec {
     BenchSanity.Canaries.foreach { n =>
       assert(SparkEntry.queries.contains(n), s"canary $n not registered")
     }
-    def drive(name: String): Unit = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.select(xxhash64(df.columns.map(col): _*).as("h"))
-        .agg(expr("bit_xor(h)")).head()
-    }
-    val s = BenchSanity.sample(drive)
+    val s = BenchSanity.sample(n => Harness.drive(SparkEntry.queries(n)(spark, sfDir)))
     val inst = BenchSanity.instability(s)
     assert(inst < 2.0,
       s"warmed canaries must be steady-state on the test box: $inst ($s)")

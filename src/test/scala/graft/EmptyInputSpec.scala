@@ -22,7 +22,7 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   test("every query runs over empty tables without throwing") {
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         try { fn(spark, emptyDir).collect(); None }
@@ -30,7 +30,7 @@ class EmptyInputSpec extends SparkSpec {
           Some(s"$name: ${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(120)}")
         }
     }
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 }

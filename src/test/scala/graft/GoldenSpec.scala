@@ -57,7 +57,7 @@ class GoldenSpec extends SparkSpec {
       // drop the memoized dedup artifacts: a cached signature/edge/label
       // table built under the previous partitioning would otherwise be
       // reused, silently exempting those stages from the invariance check
-      graft.operators.TextOps.release(spark)
+      graft.sources.IndexStore.release(spark)
       conf.set("spark.sql.shuffle.partitions", n)
       try sample.map(q => q -> fingerprint(q)).toMap
       finally conf.set("spark.sql.shuffle.partitions", before)
@@ -439,7 +439,7 @@ class GoldenSpec extends SparkSpec {
     val missing = SparkEntry.queries.keySet --
       goldenAll.keySet -- Set("q22_approx_distinct", "q35_approx_quantile")
     assert(missing.isEmpty, s"queries without a golden entry: $missing")
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
     val drifted = goldenAll.toSeq.sortBy(_._1).flatMap { case (name, want) =>
       val got = fingerprint(name)
       if (got == want) None else Some(s"$name: got $got want $want")

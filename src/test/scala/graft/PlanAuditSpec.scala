@@ -237,7 +237,7 @@ class PlanAuditSpec extends SparkSpec {
     // exactly that (suggestPhrase sort-merge-joined the corpus bigram
     // aggregate where the code asked for a broadcast), so every
     // dropped hint is now a hard failure with the offending query named.
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
     val dropped = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
         "graft-hint-capture", null, null, false,
@@ -579,7 +579,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("asset reachability reuses ONE memoized edge set across all hop joins") {
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
     val df = SparkEntry.queries("asset_reachability")(spark, sfDir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString

@@ -6,30 +6,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for the suite (one JVM per `sbt test` run;
-  * session config mirrors Verify/Bench bootstrap).
+  * built by [[Harness.session]] like every main's session).
   */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Test-scale streaming queries live for seconds but the state
-      // store maintenance/snapshot-upload cadence is sized for
-      // long-running production streams, so the coordinator's
-      // snapshot-lag WARN fires for every stateful test query — and a
-      // query leaked past its awaitTermination timeout on a loaded box
-      // spams it in a tight loop until the harness budget (the r16
-      // driver's test_tail was 100% this warning). The report is
-      // diagnostic-only; the leak itself is closed by afterEach below.
-      .config("spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag",
-        "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Harness.session(cpus = 4, conf = Map(
+    // Test-scale streaming queries live for seconds but the state
+    // store maintenance/snapshot-upload cadence is sized for
+    // long-running production streams, so the coordinator's
+    // snapshot-lag WARN fires for every stateful test query — and a
+    // query leaked past its awaitTermination timeout on a loaded box
+    // spams it in a tight loop until the suite's time budget runs out
+    // (the round-16 test log tail was 100% this warning). The report is
+    // diagnostic-only; the leak itself is closed by afterEach below.
+    "spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag" -> "false"))
 }
 
 trait SparkSpec extends AnyFunSuite

@@ -577,7 +577,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("knnGraph: bounded out-degree, dense ranks, sims descend, no self-edges") {
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
     val rows = VectorOps.knnGraph(spark, sfDir).collect()
     val bySrc = rows.groupBy(_.getAs[Long]("vec_id"))
     assert(bySrc.values.forall(_.length <= VectorOps.GraphK))
@@ -588,11 +588,11 @@ class VectorOpsSpec extends SparkSpec {
       assert(sims.zip(sims.drop(1)).forall { case (a, b) => a >= b })
       assert(es.forall(_.getAs[Long]("neighbor_id") != src))
     }
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
   }
 
   test("graphRecall: one-hop expansion never loses to bare seeds, and buys recall here") {
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
     val rows = VectorOps.graphRecall(spark, sfDir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -602,11 +602,11 @@ class VectorOpsSpec extends SparkSpec {
     // on the sf0.001 corpus the hop genuinely recovers neighbors
     assert(rows.map(_.getAs[Double]("recall_at_k")).sum >
       rows.map(_.getAs[Double]("seed_recall_at_k")).sum)
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
   }
 
   test("beamRecall: multi-hop beam never loses to the one-hop expansion (superset invariant)") {
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
     val rows = VectorOps.beamRecall(spark, sfDir).collect()
     assert(rows.nonEmpty)
     // the exhaustive first hop makes the beam's candidate pool a
@@ -626,11 +626,11 @@ class VectorOpsSpec extends SparkSpec {
       val sims = sorted.map(_.getAs[Double]("sim"))
       assert(sims.zip(sims.drop(1)).forall { case (a, b) => a >= b })
     }
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
   }
 
   test("bitextMine: parity sides, dense rank, and an exact margin recompute") {
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
     val rows = VectorOps.bitextMine(spark, sfDir).collect()
       .sortBy(_.getAs[Long]("rank"))
     assert(rows.length === VectorOps.BitextTopN)
@@ -674,7 +674,7 @@ class VectorOpsSpec extends SparkSpec {
     val expected = ((1.0 + simTop) * (2199023255552L * ca * cb).toDouble) /
       (pa * cb + pb * ca).toDouble
     assert(top.getAs[Double]("margin") === expected)
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
   }
 
   test("hardNegatives: labels differ, pos_sim is the true positive max, semi-hard replays") {
@@ -716,7 +716,7 @@ class VectorOpsSpec extends SparkSpec {
       (10L, vec(1, 0.00f), 1), (11L, vec(1, 0.01f), 1), (12L, vec(1, 0.02f), 1)))
     val hi = VectorOps.silhouette(spark, tight, nlist = 2).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
-    graft.operators.TextOps.release(spark)
+    graft.sources.IndexStore.release(spark)
     assert(hi.map(_._2._1).sum === 6L)       // every vector scored once
     hi.foreach { case (c, (_, _, s)) => assert(s > 0.8, s"cluster $c low s=$s") }
     // real fixture: conservation + the emitted mean IS sum/(n·grid)
@@ -741,10 +741,12 @@ class VectorOpsSpec extends SparkSpec {
         s"query $q curve ${byProbe.mkString(",")}")
     }
     // each sweep point matches its standalone gauge
-    val single = VectorOps.ivfRecall(spark, sfDir, nprobe = 4).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    rows.filter(_._1 == 4L).foreach { case (_, q, rec) =>
-      assert(rec === single(q), s"query $q at nprobe 4")
+    VectorOps.RecallCurveProbes.foreach { np =>
+      val single = VectorOps.ivfRecall(spark, sfDir, nprobe = np).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      rows.filter(_._1 == np.toLong).foreach { case (_, q, rec) =>
+        assert(rec === single(q), s"query $q at nprobe $np")
+      }
     }
   }
 

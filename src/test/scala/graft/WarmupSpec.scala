@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.TextOps
+import graft.sources.IndexStore
 
 /** Staleness guard for the bench warmup list (SparkEntry.warmups).
   *
@@ -12,8 +12,8 @@ import graft.operators.TextOps
   * query builds must be touched by some warmup entry.
   *
   * Registration happens at plan-CONSTRUCTION time inside
-  * TextOps.memoized (getOrElseUpdate runs while the DataFrame is being
-  * assembled), so enumerating artifacts only needs each query's
+  * IndexStore.frame/value (getOrElseUpdate runs while the DataFrame is
+  * being assembled), so enumerating artifacts only needs each query's
   * builder invoked, not its job executed — the whole registry
   * constructs in seconds at sf0.001.
   */
@@ -27,12 +27,12 @@ class WarmupSpec extends SparkSpec {
 
   test("warmup list covers every memoized artifact any registry query builds") {
     // clean slate for THIS session so key sets are attributable
-    TextOps.release(spark)
+    IndexStore.release(spark)
     SparkEntry.warmups.foreach(n => SparkEntry.queries(n)(spark, sfDir))
-    val afterWarmups = TextOps.memoKeysFor(spark)
+    val afterWarmups = IndexStore.keysFor(spark)
     assert(afterWarmups.nonEmpty, "warmups registered no memoized artifacts at all")
     SparkEntry.queries.keys.toSeq.sorted.foreach(n => SparkEntry.queries(n)(spark, sfDir))
-    val all = TextOps.memoKeysFor(spark)
+    val all = IndexStore.keysFor(spark)
     val uncovered = all -- afterWarmups
     assert(uncovered.isEmpty,
       s"memoized artifacts no warmup touches (add their family's query to SparkEntry.warmups): $uncovered")

@@ -154,7 +154,7 @@ for (n <- Seq(16000, 48000)) {
   val hits = sq8.count(r => exactSet((r.getLong(0), r.getLong(1))))
   val recall = hits.toDouble / exactSet.size
   println(f"  N=$n%6d (|Q|=${n / 100}%4d): exact $tE%6.2f s, sq8 $tS%6.2f s, recall@10 $recall%.3f")
-  graft.operators.TextOps.release(spark)
+  graft.sources.IndexStore.release(spark)
 }
 
 println("== PQ ADC search vs exact at growing synthetic corpus (LUT lookups/candidate; re-rank fixed at 8K/query) ==")
@@ -185,7 +185,7 @@ for (n <- Seq(16000, 48000)) {
   val hits = pq.count(r => exactSet((r.getLong(0), r.getLong(1))))
   val recall = hits.toDouble / exactSet.size
   println(f"  N=$n%6d (|Q|=${n / 100}%4d): exact $tE%6.2f s, pq index+search $tI%6.2f s, search $tS%6.2f s, recall@10 $recall%.3f")
-  graft.operators.TextOps.release(spark)
+  graft.sources.IndexStore.release(spark)
 }
 
 println("== Binary-quantization Hamming scan vs exact (2 xor+popcnt per candidate; re-rank fixed at 8K/query) ==")
@@ -224,7 +224,7 @@ for ((n, rr) <- Seq((16000, 8), (48000, 8), (48000, 64))) {
   val hits = bq.count(r => exactSet((r.getLong(0), r.getLong(1))))
   val recall = hits.toDouble / exactSet.size
   println(f"  N=$n%6d rr=$rr%3d (|Q|=${n / 100}%4d): exact $tE%6.2f s, bq index+search $tI%6.2f s, search $tS%6.2f s, recall@10 $recall%.3f")
-  graft.operators.TextOps.release(spark)
+  graft.sources.IndexStore.release(spark)
 }
 
 println("== Label-partitioned filtered ANN at growing corpus (10 labels; candidate floor fixed) ==")
@@ -257,7 +257,7 @@ for ((n, nl) <- Seq((16000, 10), (48000, 10), (48000, 30))) {
   val hits = lp.count(r => exactSet((r.getLong(0), r.getLong(1))))
   val recall = hits.toDouble / exactSet.size
   println(f"  N=$n%6d nlist=$nl%2d (|Q|=${n / 100}%4d): exact-filtered $tE%6.2f s, index+search $tI%6.2f s, search $tS%6.2f s, recall@10 $recall%.3f")
-  graft.operators.TextOps.release(spark)
+  graft.sources.IndexStore.release(spark)
 }
 
 println("== transitive-closure shape (frontier-dedup BFS over the REAL TPC-H hierarchy: lineitem -> order -> customer -> nation -> region) ==")
@@ -537,7 +537,7 @@ for ((n, nlist) <- Seq((8000, 10), (32000, 10), (32000, 40))) {
       .agg(count(lit(1)), sum(col("is_dup"))).head()
   }
   println(f"  N=$n%6d nlist=$nlist%3d: $s%6.2f s")
-  graft.operators.TextOps.release(spark)
+  graft.sources.IndexStore.release(spark)
 }
 
 println("== HLL register file (fixed 2^12 registers; exchange = |tasks| x 32KB, key-cardinality independent like CMS) ==")
@@ -957,7 +957,7 @@ for ((n, nlist) <- Seq((8000, 10), (64000, 10), (64000, 28))) {
       .agg(count(lit(1)), sum(col("kept")), sum(col("is_dup"))).head()
   }
   println(f"  N=$n%6d nlist=$nlist%3d: $s%6.2f s")
-  graft.operators.TextOps.release(spark)
+  graft.sources.IndexStore.release(spark)
 }
 
 println("== keyset page fetch at growing depth vs offset pagination (the q53-vs-q52 claim, measured) ==")
